@@ -325,6 +325,19 @@ ITERATIVE = {"q117_pagerank_dup_graph", "q119_leakage_free_split",
 DRIFT_WATCH: set[str] = set()
 
 
+def sentinel_polluted(
+    min_sec: float, steady_sec: float | None, final_sec: float
+) -> bool:
+    """True when the load sentinel's three timings of one query disagree
+    by more than 1.5x: final vs min in either direction, and final vs the
+    steady tail re-measure whenever there is one (floors at 50 ms)."""
+    return (
+        final_sec > 1.5 * max(min_sec, 0.05)
+        or min_sec > 1.5 * max(final_sec, 0.05)
+        or (steady_sec is not None and final_sec > 1.5 * max(steady_sec, 0.05))
+    )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -657,14 +670,13 @@ def main() -> None:
     # tide_factor_max 7.04 — every block-0 reading was an artifact).
     # Either way the block-0 values should not be trusted; the steady
     # fixed-tail re-measures (emitted as "queries" in the compact line)
-    # are the comparison channel.
+    # are the comparison channel — so final > 1.5x steady flags the flight
+    # too, even when a slow block-0 min hides end-of-run contention.
     t0 = time.time()
     _query_runner(QUERIES[HEADLINE[0]])()
     sentinel = round(time.time() - t0, 3)
-    polluted = (
-        sentinel > 1.5 * max(timings[HEADLINE[0]], 0.05)
-        or timings[HEADLINE[0]] > 1.5 * max(sentinel, 0.05)
-    )
+    steady = fixed_tail.get(HEADLINE[0])
+    polluted = sentinel_polluted(timings[HEADLINE[0]], steady, sentinel)
 
     total = round(sum(timings.values()), 3)
     headline_fixed = round(
@@ -673,7 +685,7 @@ def main() -> None:
     load_sentinel = {
         "query": HEADLINE[0],
         "min_sec": timings[HEADLINE[0]],
-        "steady_sec": fixed_tail.get(HEADLINE[0]),
+        "steady_sec": steady,
         "final_sec": sentinel,
         "polluted": polluted,
     }

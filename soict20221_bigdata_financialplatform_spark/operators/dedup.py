@@ -91,6 +91,30 @@ def exact_dedup(
 # ---------------------------------------------------------------------------
 
 
+def _signature_expr(col: str, num_hashes: int) -> Column:
+    """MinHash signature of the hashed-shingle array ``col``: element i is
+    min over its hashes x of xxhash64(i, x). Built as ONE parsed SQL
+    expression: the same tree as k Column-API ``transform`` lambdas, so the
+    hashes are bit-identical, at one py4j call instead of thousands."""
+    fams = ", ".join(
+        f"array_min(transform(`{col}`, x -> xxhash64({i}, x)))"
+        for i in range(num_hashes)
+    )
+    return F.expr(f"array({fams})")
+
+
+def _bands_expr(num_hashes: int, bands: int) -> Column:
+    """LSH band keys of the ``signature`` column: key b hashes the band
+    index with its r = num_hashes/bands consecutive signature rows."""
+    assert num_hashes % bands == 0
+    r = num_hashes // bands
+    keys = ", ".join(
+        f"xxhash64({b}, " + ", ".join(f"signature[{b * r + j}]" for j in range(r)) + ")"
+        for b in range(bands)
+    )
+    return F.expr(f"array({keys})")
+
+
 def minhash_signature(
     df: DataFrame,
     text_col: str = "text",
@@ -104,24 +128,10 @@ def minhash_signature(
     families then re-hash the fixed-width long with the family index as seed
     column — k× cheaper than re-hashing variable-length text per family,
     identical independence properties. All inside one Project over the
-    shingle array (higher-order functions, no explode).
-
-    NB: the per-family lambda must take exactly ONE parameter — PySpark
-    interprets a two-arg lambda as (element, array_index) and would silently
-    replace the family seed with the element position."""
-
-    def _family(i: int):
-        return lambda h: F.xxhash64(F.lit(i), h)
-
-    sig = F.array(
-        *[
-            F.array_min(F.transform(F.col("__h"), _family(i)))
-            for i in range(num_hashes)
-        ]
-    )
+    shingle array (higher-order functions, no explode)."""
     return df.select(
         F.col(id_col), shingle_hashes(text_col, shingle_n).alias("__h")
-    ).select(F.col(id_col), sig.alias("signature"))
+    ).select(F.col(id_col), _signature_expr("__h", num_hashes).alias("signature"))
 
 
 def minhash_near_dup_pairs(
@@ -160,12 +170,10 @@ def minhash_near_dup_pairs(
     salt decomposes each bucket's pair space into ~salt²/2 independent join
     cells (``skew.salted_self_pairs``) — EXACTLY the same candidate set
     (equivalence tested), quadratic work spread across the cluster."""
-    assert num_hashes % bands == 0
     if max_bucket_size == "auto":
         max_bucket_size = suggest_minhash_cap(
             df, text_col, id_col, num_hashes, bands, shingle_n
         )
-    r = num_hashes // bands
     # CPU-bound per-row work: spread the corpus over all cores first (a
     # single small input file otherwise pins the whole hash pipeline to one
     # task; at cluster scale this is a cheap narrow-ish shuffle vs minutes of
@@ -180,30 +188,14 @@ def minhash_near_dup_pairs(
         F.col(id_col), shingle_hashes(text_col, shingle_n).alias("sh")
     ).persist()
 
-    def _family(i: int):
-        return lambda h: F.xxhash64(F.lit(i), h)
-
-    sig = F.array(
-        *[
-            F.array_min(F.transform(F.col("sh"), _family(i)))
-            for i in range(num_hashes)
-        ]
-    )
-    sigs = sh.select(F.col(id_col), sig.alias("signature"))
-
-    band_arr = F.array(
-        *[
-            F.xxhash64(F.lit(b), *[F.col("signature")[b * r + j] for j in range(r)])
-            for b in range(bands)
-        ]
-    )
+    sigs = sh.select(F.col(id_col), _signature_expr("sh", num_hashes).alias("signature"))
     # Persist the banded signatures: both sides of the self-join (and nothing
     # else) read them — without this, each join branch re-runs the whole
     # shingle+hash pipeline over the corpus. Signatures are b longs per doc,
     # tiny relative to the corpus, so this is the canonical LSH materialize
     # point at any scale.
     banded = sigs.select(
-        F.col(id_col), F.posexplode(band_arr).alias("band", "band_key")
+        F.col(id_col), F.posexplode(_bands_expr(num_hashes, bands)).alias("band", "band_key")
     ).persist()
     if max_bucket_size is not None:
         wb = Window.partitionBy("band", "band_key")
@@ -304,20 +296,12 @@ def minhash_hot_band_report(
     (bucket_size² / 2 candidate pairs) for `hot_bucket_salt` sizing. One
     grouped count over the same banded posexplode the pair join uses; no
     pair blow-up anywhere."""
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
     npart = df.sparkSession.sparkContext.defaultParallelism
     sigs = minhash_signature(
         df.repartition(npart, id_col), text_col, id_col, num_hashes, shingle_n
     )
-    band_arr = F.array(
-        *[
-            F.xxhash64(F.lit(b), *[F.col("signature")[b * r + j] for j in range(r)])
-            for b in range(bands)
-        ]
-    )
     return (
-        sigs.select(F.posexplode(band_arr).alias("band", "band_key"))
+        sigs.select(F.posexplode(_bands_expr(num_hashes, bands)).alias("band", "band_key"))
         .groupBy("band", "band_key")
         .agg(F.count(F.lit(1)).alias("bucket_size"))
         .where(F.col("bucket_size") >= min_bucket_size)

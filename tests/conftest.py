@@ -90,9 +90,36 @@ SLOW_TESTS = frozenset({
 })
 
 
+def unmatched_slow_tests(nodeids, rootdir: str) -> list[str]:
+    """SLOW_TESTS entries that name no collected test: the entry's file is
+    gone, or it was collected and holds no test of that name (a rename)."""
+    collected = set(nodeids)
+    collected |= {n.split("[", 1)[0] for n in collected}
+    files = {n.split("::", 1)[0] for n in collected}
+    return sorted(
+        e for e in SLOW_TESTS - collected
+        if e.split("::", 1)[0] in files
+        or not os.path.exists(os.path.join(rootdir, e.split("::", 1)[0]))
+    )
+
+
 def pytest_collection_modifyitems(config, items):
     for item in items:
         # match parametrized variants by their base node id too
         base = item.nodeid.split("[", 1)[0]
         if item.nodeid in SLOW_TESTS or base in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    # Under the full run (`-m ""`, what ci_gate runs) a stale entry fails
+    # collection: a renamed slow test would otherwise slip back into the
+    # fast suite unnoticed. Only whole-file collections are checked — a
+    # `-k` filter or a `file::test` argument collects a subset on purpose.
+    if (
+        config.option.markexpr == ""
+        and not config.option.keyword
+        and not any("::" in a for a in config.args)
+    ):
+        stale = unmatched_slow_tests((i.nodeid for i in items), str(config.rootpath))
+        if stale:
+            raise pytest.UsageError(
+                "tests/conftest.py SLOW_TESTS entries match no test: " + ", ".join(stale)
+            )

@@ -59,6 +59,45 @@ def test_minhash_signature_approximates_jaccard(spark):
     assert agree == pytest.approx(j01, abs=0.15)
 
 
+def test_minhash_sql_exprs_match_column_api_construction(spark):
+    """The parsed ``_signature_expr``/``_bands_expr`` give bit-identical
+    signatures and band keys to the Column-API construction they replaced
+    (kept inline here as the reference), on docs with NULL-padded short
+    shingle arrays and a NULL text too."""
+    num_hashes, bands = 64, 16
+    r = num_hashes // bands
+    rows = [(i, t) for i, t in enumerate(
+        [BASE, BASE.replace("fox", "wolf"), "two words", "", None,
+         "spark engines and distributed query processing at scale"])]
+    sh = spark.createDataFrame(rows, "doc_id long, text string").select(
+        "doc_id", dd.shingle_hashes("text").alias("sh")
+    )
+
+    def _family(i):
+        return lambda h: F.xxhash64(F.lit(i), h)
+
+    ref_sig = F.array(*[F.array_min(F.transform(F.col("sh"), _family(i)))
+                        for i in range(num_hashes)])
+    ref_bands = F.array(*[
+        F.xxhash64(F.lit(b), *[F.col("signature")[b * r + j] for j in range(r)])
+        for b in range(bands)
+    ])
+
+    def keyed(sig):
+        out = sh.select("doc_id", sig.alias("signature")).select(
+            "doc_id", "signature", ref_bands.alias("ref"),
+            dd._bands_expr(num_hashes, bands).alias("new"),
+        )
+        return {row.doc_id: row for row in out.collect()}
+
+    ref, new = keyed(ref_sig), keyed(dd._signature_expr("sh", num_hashes))
+    assert ref.keys() == new.keys() == set(range(len(rows)))
+    for k in ref:
+        assert new[k].signature == ref[k].signature
+        assert new[k].new == ref[k].ref == new[k].ref
+    assert ref[0].signature is not None and len(set(ref[0].ref)) > 1
+
+
 def test_simhash_near_dup(spark):
     pairs = dd.simhash_near_dup_pairs(_docs(spark), max_hamming=10).collect()
     found = {(r.id_a, r.id_b) for r in pairs}

@@ -481,3 +481,45 @@ def test_quarantine_specials_matches_duckdb_view(spark, tmp_path):
         v is not None and (math.isnan(v) or math.isinf(v))
         for v in got.values()
     )
+
+
+def test_q143_null_orderkey_never_forms_a_basket(spark, tmp_path):
+    """A NULL l_orderkey is no order: its lines must not pair up as one
+    basket (the oracle's self-join on l_orderkey drops them), while the
+    per-part basket count keeps their DISTINCT (NULL, part) rows exactly
+    as the oracle's ``ca`` does. Pair (1, 3) sits in 2 real orders + the
+    NULL group, so a NULL basket would lift it over the c_ab >= 3 cut."""
+    import os
+    import sys
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(__file__), "..", "tools")
+    )
+    import parity_check
+    from soict20221_bigdata_financialplatform_spark.queries import (
+        ORACLE,
+        QUERIES,
+    )
+
+    lines = [(1, 1), (1, 2), (1, None), (2, 1), (2, 2), (3, 1), (3, 2),
+             (4, 1), (4, 3), (5, 2), (5, 3), (6, 1), (6, 3),
+             (None, 1), (None, 1), (None, 2), (None, 3)]
+    sf = str(tmp_path)
+    pq.write_table(
+        pa.table({"l_orderkey": pa.array([o for o, _ in lines], pa.int64()),
+                  "l_partkey": pa.array([p for _, p in lines], pa.int64())}),
+        os.path.join(sf, "lineitem.parquet"),
+    )
+    out = QUERIES["q143_assoc_rules"](spark, sf)
+    got = [tuple(r) for r in out.collect()]
+    assert [(r[0], r[1], r[2]) for r in got] == [(1, 2, 3)]
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW lineitem AS SELECT * FROM '{sf}/lineitem.parquet'")
+    res = con.sql(ORACLE["q143_assoc_rules"])
+    assert parity_check._norm_rows(out.columns, got) == parity_check._norm_rows(
+        res.columns, res.fetchall()
+    )
