@@ -9,7 +9,6 @@ from soict20221_bigdata_financialplatform_spark.functions.indicators import (
     change_abs,
     change_pct,
     ema,
-    ema_native,
     rolling_max,
     rolling_min,
     rsi,
@@ -34,7 +33,6 @@ __all__ = [
     "change_abs",
     "change_pct",
     "ema",
-    "ema_native",
     "rolling_max",
     "rolling_min",
     "rsi",

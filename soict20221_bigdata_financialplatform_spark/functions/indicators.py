@@ -369,42 +369,6 @@ def holt_linear(
     return df.groupBy(*key_cols).applyInPandas(_grp, schema=out_schema)
 
 
-def ema_native(
-    df: DataFrame,
-    n: int = 25,
-    key_cols: Sequence[str] = ("symbol",),
-    order_col: str = "date",
-    value_col: str = "close",
-    out_col: str | None = None,
-) -> DataFrame:
-    """Exact-native EMA — the recursion folded with the ``aggregate`` HOF
-    over a running ``collect_list`` window (no Python at all).
-
-    Semantics identical to ``ema()`` (α=2/(n+1), adjust=False, first-value
-    seed). COST: the running collect_list makes this O(T²) per key — it
-    exists for SQL-surface parity and for short series (a symbol's daily
-    bars); use ``ema()`` (linear, Arrow-batched) for long series. This is the
-    documented trade-off of expressing a recursion in a non-recursive SQL
-    algebra.
-    """
-    out_col = out_col or f"ema_{n}"
-    alpha = 2.0 / (n + 1)
-    w = (
-        Window.partitionBy(*key_cols)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    arr = F.collect_list(value_col).over(w)
-    folded = F.aggregate(
-        arr,
-        F.lit(None).cast("double"),
-        lambda acc, x: F.when(acc.isNull(), x).otherwise(
-            F.lit(alpha) * x + F.lit(1.0 - alpha) * acc
-        ),
-    )
-    return df.withColumn(out_col, folded)
-
-
 def bollinger(
     df: DataFrame,
     n: int = 20,

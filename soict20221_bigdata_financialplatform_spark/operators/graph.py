@@ -52,7 +52,6 @@ def pagerank(
     iterations: int = 5,
     damping: float = 0.85,
     round_to: int = 6,
-    checkpoint_every: int = 3,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """``(node, rank)`` after ``iterations`` synchronous PageRank rounds
@@ -88,9 +87,9 @@ def pagerank(
     LAZY (``eager=False``), planned at build time over the previous
     round's flat LogicalRDD (constant per-round plan size) but
     materialized by the CALLER's single action — the per-round eager
-    materialization jobs are gone. ``checkpoint_every`` is retained for
-    API stability but no longer used: a lazy checkpoint per round costs
-    no job, so every round truncates."""
+    materialization jobs are gone, and every round truncates. Each
+    round's checkpoint blocks stay pinned until the session ends
+    (``unpersist`` cannot release them; SCALE.md)."""
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()

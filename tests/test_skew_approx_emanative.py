@@ -1,5 +1,4 @@
-"""Salted-join/agg equivalence, native-HOF EMA equivalence, approx-sketch
-error bounds."""
+"""Salted-join/agg equivalence and approx-sketch error bounds."""
 
 from __future__ import annotations
 
@@ -7,10 +6,8 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from soict20221_bigdata_financialplatform_spark.functions import indicators as ind
 from soict20221_bigdata_financialplatform_spark.operators import skew
 from soict20221_bigdata_financialplatform_spark.sources import load_table
-from tests.test_indicators import CLOSES, _bars, _col
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):
@@ -87,23 +84,6 @@ def test_minhash_hot_bucket_salt_same_pairs(spark):
         ).collect()
     }
     assert salted == plain and plain  # identical and non-empty
-
-
-def test_ema_native_matches_pandas_ema(spark):
-    df = _bars(spark)
-    a = _col(ind.ema(df, 5), "ema_5")
-    b = _col(ind.ema_native(df, 5), "ema_5")
-    assert b == pytest.approx(a, abs=1e-9)
-
-
-def test_ema_native_multi_symbol(spark):
-    both = _bars(spark, CLOSES, "AAA").unionByName(
-        _bars(spark, [c * 3 for c in CLOSES], "BBB")
-    )
-    out = ind.ema_native(both, 4)
-    a = [r["ema_4"] for r in out.where("symbol='AAA'").orderBy("date").collect()]
-    expected = _col(ind.ema(_bars(spark), 4), "ema_4")
-    assert a == pytest.approx(expected, abs=1e-9)
 
 
 def test_approx_count_distinct_bound(spark, sf_dir):
