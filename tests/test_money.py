@@ -1,8 +1,8 @@
 """Pins for the one money-sum rule, ``queries.MONEY_SUM``: Spark builders
 call ``money_sum(<sql expr>)`` and each DuckDB twin embeds the same template
-text, so a money total is summed exactly in decimal and rounded half-up to
-cents on both engines. A double sum rounded by hand splits the engines
-whenever the exact sum lands on a half cent."""
+text, so a money total is summed exactly in integer micro-units and rounded
+half-up to cents on both engines. A double sum rounded by hand splits the
+engines whenever the exact sum lands on a half cent."""
 
 from __future__ import annotations
 
@@ -117,19 +117,3 @@ def test_every_money_sum_builder_has_the_same_template_in_its_oracle():
             assert MONEY_SUM.format(e) in ORACLE[name], (name, e)
         assert set(oracle_exprs) <= set(exprs), (name, oracle_exprs, exprs)
     assert users >= 20
-
-
-# Money sums that stay double on purpose: a mean (``/ 7.0``), a running
-# window sum of one 2-decimal column, and a ratio of two sums rounded to 6.
-_LEFT_DOUBLE = ("/ 7.0", "/ F.lit(7.0)", "OVER win", "/ sum(volume), 6)")
-
-
-def test_no_money_sum_is_rounded_by_hand():
-    src = inspect.getsource(queries)
-    money = re.compile(r"extendedprice|totalprice|acctbal|retailprice|volume|amount")
-    hand = []
-    for m in re.finditer(r"round\(\s*(?:F\.)?sum\(", src):
-        head = src[m.end():m.end() + 120]
-        if money.search(head.split(")")[0]) and not any(k in head for k in _LEFT_DOUBLE):
-            hand.append(src[m.start():m.start() + 60])
-    assert not hand

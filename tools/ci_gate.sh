@@ -12,7 +12,7 @@
 #   1. output-TYPE audit  (schema-only, catches driver-hasher burns)   ~2 min
 #   2. plan linter sweep  (BNLJ / unpartitioned-window bans)           ~7 min
 #   3. full sf0.01 oracle parity (bit-exact vs DuckDB, no tolerance)   ~6 min
-#   3b. seeded money parity: MONEY_SUM queries on 5 fixture seeds  ~4.5 min
+#   3b. seeded money parity: MONEY_SUM queries on 5 fixture seeds    ~4 min
 #   4. dirty-text parity on corrupted sf0.001 documents                ~6 min
 #   5. dirty-numeric parity on corrupted sf0.001 events+lineitem       ~8 min
 #   6. dirty-numeric parity AT SCALE (sf0.01 — SF-asymmetric overflow) ~9 min
@@ -54,8 +54,8 @@ run_stage "oracle parity (sf0.01)" \
 # Every query whose twin uses queries.MONEY_SUM, on perfbench's sf0.002
 # fixtures for seeds where a double money sum lands on a half cent (55,
 # 115, 189: the only failing seeds of a 0-199 sweep before money sums
-# went decimal) plus two controls. The fixed testdata never lands there.
-# Measured 269 s for 22 queries x 5 seeds on 4 cores.
+# went exact) plus two controls. The fixed testdata never lands there.
+# Measured 232 s for 21 queries x 5 seeds on 4 cores.
 money_parity() {
     local q seed dir rc
     q=$(python -c "from soict20221_bigdata_financialplatform_spark.queries import MONEY_SUM, ORACLE
