@@ -152,7 +152,6 @@ HEADLINE = [
     "q255_minhash_store_novelty",
     # r9 rebuilds (tightened enum-window linter): re-baseline
     "q179_heaps_fit",
-    "q192_ccnet_buckets",
     "q194_quantile_normalize",
     # r10 backlog authored r9: baseline on entry so the r10 window
     # promotion ships with a perf history
@@ -282,6 +281,9 @@ FIXED_SUBSET = (
 )
 assert set(FIXED_SUBSET) <= set(HEADLINE), sorted(
     set(FIXED_SUBSET) - set(HEADLINE)
+)
+assert len(set(HEADLINE)) == len(HEADLINE), sorted(
+    n for n in set(HEADLINE) if HEADLINE.count(n) > 1
 )
 
 # Frozen absolute probe reference for the detrended longitudinal metric

@@ -111,7 +111,7 @@ def main() -> None:
     queries = emb.where(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    topk = launch(similarity.brute_force_topk(emb, queries, k=5))
+    topk = launch(similarity.brute_force_topk_blocked(emb, queries, k=5))
     print(f"[7] ANN: {topk.count()} (query, neighbor) rows")
 
     # 8. dataloader layout: pack the kept docs into 2048-token training

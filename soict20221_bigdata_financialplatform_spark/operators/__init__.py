@@ -12,7 +12,7 @@ from soict20221_bigdata_financialplatform_spark.operators.dedup import (
     simhash_near_dup_pairs,
 )
 from soict20221_bigdata_financialplatform_spark.operators.similarity import (
-    brute_force_topk,
+    brute_force_topk_blocked,
     embedding_near_dup_pairs,
     lsh_topk,
 )
@@ -37,7 +37,7 @@ __all__ = [
     "minhash_near_dup_pairs",
     "ngram_jaccard_pairs",
     "simhash_near_dup_pairs",
-    "brute_force_topk",
+    "brute_force_topk_blocked",
     "embedding_near_dup_pairs",
     "lsh_topk",
     "salted_agg_count",

@@ -1,7 +1,11 @@
 """Similarity search over embedding columns (driver brief: ANN over
-``array<float>`` — brute-force cosine top-k baseline + LSH-bucketed scale
-path). All-native expressions: dot products via ``zip_with``+``aggregate``
-higher-order functions (JVM-side, no Python), top-k via per-query windows.
+``array<float>`` — one exact cosine kNN, :func:`brute_force_topk_blocked`,
+plus the LSH / IVF / PQ candidate paths that scale past it). The
+approximate paths are all-native expressions: dot products and squared
+distances via ``zip_with``+``aggregate`` higher-order functions (JVM-side,
+no Python), nearest-centroid picks via one broadcast centroid array and a
+per-row HOF argmin, top-k via per-query windows. Each of those pieces is
+one helper below, shared by every operator that needs it.
 """
 
 from __future__ import annotations
@@ -11,7 +15,7 @@ import random
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -27,6 +31,18 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
+def sqdist(a: Column, b: Column) -> Column:
+    """Squared Euclidean distance as the left fold 0.0 + (a₁−b₁)² + …, the
+    order the DuckDB twins' ``list_sum`` reproduces. NULL when either
+    vector (or any element) is NULL; ragged pairs are NULL too, since
+    ``zip_with`` pads the shorter side with NULL."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def _inf_null(d: Column) -> Column:
     """NULL distance -> +infinity, so a NULL vector or NULL centroid can
     never WIN an argmin. Spark's struct comparator ranks a NULL first
@@ -36,6 +52,62 @@ def _inf_null(d: Column) -> Column:
     +inf ties (all-NULL candidate sets) fall to the cid tiebreak in both
     engines, same as DuckDB's all-NULL ordering."""
     return F.coalesce(d, F.lit(float("inf")))
+
+
+def _centroid_array(
+    cents: DataFrame,
+    cid: str,
+    cv: str,
+    grp: str | None = None,
+    name: str = "__cents",
+) -> DataFrame:
+    """Every centroid in ONE broadcast row: an array ``name`` of
+    (cid, cv) structs, led by a group id ``g`` when ``grp`` is given
+    (stacked trainings). Consumers cross-join it, so picking a cell is a
+    per-row HOF over the array — the corpus is never row-inflated by the
+    centroid count and never shuffles to pick a cell."""
+    fields = [F.col(cid).alias("cid"), F.col(cv).alias("cv")]
+    if grp is not None:
+        fields.insert(0, F.col(grp).alias("g"))
+    return F.broadcast(cents.agg(F.collect_list(F.struct(*fields)).alias(name)))
+
+
+def _cell_dists(vec: Column, cents: Column | str = "__cents") -> Column:
+    """(d, cid) for every centroid struct in ``cents``, d = ``sqdist``
+    with NULL -> +inf (:func:`_inf_null`). Struct order is (d, cid), so
+    ``array_min`` is the nearest cell and ``array_sort`` the probe order,
+    both breaking distance ties on the lower centroid id — the DuckDB
+    twins' ``ORDER BY d, cid``. The lambda closes over ``vec`` through
+    this function's scope (single-parameter HOF lambdas only, invariant
+    3); callers stage any slice as its own column first (invariant 14)."""
+    return F.transform(
+        cents,
+        lambda c: F.struct(
+            _inf_null(sqdist(vec, c["cv"])).alias("d"), c["cid"].alias("cid")
+        ),
+    )
+
+
+def _nearest(vec: Column, cents: Column | str = "__cents") -> Column:
+    """The argmin centroid id of ``vec`` over ``cents``."""
+    return F.array_min(_cell_dists(vec, cents))["cid"]
+
+
+def _nearest_n(vec: Column, n: int) -> Column:
+    """The ids of the ``n`` nearest centroids (an IVF query's probes)."""
+    return F.transform(
+        F.slice(F.array_sort(_cell_dists(vec)), 1, n), lambda s: s["cid"]
+    )
+
+
+def _topk(scored: DataFrame, part: str, order: list[Column], k: int) -> DataFrame:
+    """The ranked tail of every join-shaped top-k operator: ``row_number``
+    over ``order`` per ``part`` key, rows past rank ``k`` dropped. Callers
+    end ``order`` on a unique id, so ranks are the same in both engines."""
+    w = Window.partitionBy(part).orderBy(*order)
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -48,63 +120,10 @@ def cosine_safe(a: Column, b: Column) -> Column:
     NULL-poisoned norms both yield NULL there, while Spark ANSI THROWS
     on the division; r14 dirty-embedding gate). Use this when the score
     is a plain output column; RANKED consumers must EXCLUDE bad rows
-    instead (see brute_force_topk — NULL must never reach an ORDER BY
-    whose placement defaults could differ)."""
+    instead (see brute_force_topk_blocked — NULL must never reach an
+    ORDER BY whose placement defaults could differ)."""
     na, nb = _norm(a), _norm(b)
     return F.when((na > 0) & (nb > 0), _dot(a, b) / (na * nb))
-
-
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Exact cosine top-k: broadcast the (small) query set against the corpus,
-    score every pair, keep k per query.
-
-    At scale: the corpus is the big side and is only scanned once; queries are
-    broadcast (no corpus shuffle for scoring). The top-k is a per-query-key
-    window — the one shuffle, keyed by query_id, carrying only
-    (query_id, vec_id, score). Ties break on vec_id for determinism.
-    """
-    # norms precomputed once per row (not once per pair): scoring a pair is
-    # then one dot product + two lookups — identical arithmetic, ~3x less work
-    # Zero-norm/NULL exclusion (r14 dirty-embedding contract): a vector
-    # with no positive norm has no direction — it can never be a cosine
-    # match. `__qnorm > 0` is NULL-safe on both engines (NULL fails the
-    # comparison), covering quarantined-NULL vectors AND all-zero ones.
-    # Guarding the division to NULL instead would leave NULL scores in
-    # rank windows — ASC NULL-ordering defaults differ cross-engine
-    # (Spark FIRST, DuckDB LAST), and Spark ANSI throws on the division
-    # anyway; exclusion keeps ranked results engine-identical.
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col),
-            F.col(vec_col).alias("__qvec"),
-            _norm(F.col(vec_col)).alias("__qnorm"),
-        ).where(F.col("__qnorm") > 0)
-    )
-    scored = corpus.select(
-        F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("__cnorm")
-    ).where(F.col("__cnorm") > 0).join(q).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        (_dot(F.col(vec_col), F.col("__qvec"))
-         / (F.col("__cnorm") * F.col("__qnorm"))).alias("score"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "score", "rank")
-    )
 
 
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -168,7 +187,7 @@ def lsh_topk(
         lsh_bucket(F.col(vec_col), planes).alias("__b0"),
         _norm(F.col(vec_col)).alias("__qnorm"),
     )
-    # r14 zero-norm/NULL exclusion — see brute_force_topk
+    # r14 zero-norm/NULL exclusion — see brute_force_topk_blocked
     c = c.where(F.col("__cnorm") > 0)
     qbase = qbase.where(F.col("__qnorm") > 0)
     if multi_probe >= 1:
@@ -192,122 +211,9 @@ def lsh_topk(
         (_dot(F.col(vec_col), F.col("__qvec"))
          / (F.col("__cnorm") * F.col("__qnorm"))).alias("score"),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "score", "rank")
-    )
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    nlist: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    seed: int = 42,
-    train_fraction: float = 1.0,
-) -> DataFrame:
-    """IVF (inverted-file) ANN: KMeans coarse quantizer → corpus bucketed by
-    nearest centroid → each query scores only its ``nprobe`` nearest cells.
-
-    The scale path complementing sign-LSH: centroids adapt to the data
-    distribution (LSH planes are data-oblivious). Training samples the corpus
-    (``train_fraction``); assignment is a native expression — centroid dot
-    products unrolled into an array, argmin via ``array_position`` — so the
-    corpus never leaves the JVM. ``nprobe == nlist`` degenerates to exact
-    brute force (the recall knob is explicit).
-
-    NULL embeddings are dropped up front: MLlib's KMeans ``fit`` throws on
-    a NULL feature row (FAILED_EXECUTE_UDF), so one dirty row would kill
-    the whole training job at scale — the brute-force path's
-    NULL-scores-sink-below-top-k behavior is matched here by exclusion.
-    """
-    import numpy as np
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import Window
-
-    corpus = corpus.where(F.col(vec_col).isNotNull())
-    train = corpus.select(F.col(vec_col))
-    if train_fraction < 1.0:
-        train = train.sample(fraction=train_fraction, seed=seed)
-    km = KMeans(k=nlist, seed=seed, featuresCol="features")
-    model = km.fit(train.select(array_to_vector(F.col(vec_col)).alias("features")))
-    centroids = [np.asarray(c).tolist() for c in model.clusterCenters()]
-
-    def _sqdist(vec: Column, center: list[float]) -> Column:
-        lits = F.array(*[F.lit(float(x)) for x in center])
-        return F.aggregate(
-            F.zip_with(vec, lits, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    def _cell_dists(vec: Column) -> Column:
-        return F.array(*[_sqdist(vec, c) for c in centroids])
-
-    def _nearest_cell(vec: Column) -> Column:
-        d = _cell_dists(vec)
-        return (F.array_position(d, F.array_min(d)) - 1).cast("int")
-
-    c = corpus.select(
-        F.col(id_col), F.col(vec_col), _nearest_cell(F.col(vec_col)).alias("__cell")
-    )
-
-    # query side: nprobe nearest cells, exploded to (query, cell) probes
-    qd = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        _cell_dists(F.col(vec_col)).alias("__d"),
-    )
-    seq = F.sequence(F.lit(0), F.lit(len(centroids) - 1))
-    zipped = F.zip_with(
-        F.col("__d"), seq,
-        lambda x, i: F.struct(x.alias("dist"), i.alias("idx")),
-    )
-    # array_sort on structs orders by first field (dist) — take nprobe cells
-    probe_idx = F.transform(
-        F.slice(F.array_sort(zipped), 1, nprobe), lambda s: s["idx"].cast("int")
-    )
-    q = F.broadcast(
-        qd.select(
-            F.col(query_id_col), F.col("__qvec"), F.explode(probe_idx).alias("__cell")
-        )
-    )
-
-    scored = c.join(q, "__cell").select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.col(vec_col),
-        F.col("__qvec"),
-        _norm(F.col(vec_col)).alias("__cnorm"),
-        _norm(F.col("__qvec")).alias("__qnorm"),
-    ).where(  # r14 zero-norm/NULL exclusion — see brute_force_topk
-        (F.col("__cnorm") > 0) & (F.col("__qnorm") > 0)
-    ).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        (_dot(F.col(vec_col), F.col("__qvec"))
-         / (F.col("__cnorm") * F.col("__qnorm"))).alias("score"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "score", "rank")
-    )
+    return _topk(
+        scored, query_id_col, [F.col("score").desc(), F.col(id_col).asc()], k
+    ).select(query_id_col, id_col, "score", "rank")
 
 
 def ivf_topk_fixed(
@@ -321,13 +227,13 @@ def ivf_topk_fixed(
     query_id_col: str = "query_id",
     cent_id_col: str = "cent_id",
 ) -> DataFrame:
-    """IVF ANN with a caller-supplied (fixed) coarse quantizer: same inverted-
-    file plan shape as ``ivf_topk`` — corpus bucketed by nearest centroid,
-    each query scores only its ``nprobe`` nearest cells — but the centroids
-    come in as a DataFrame instead of a KMeans fit, making the whole pipeline
-    deterministic and SQL-expressible (q72 cross-checks it against DuckDB
-    end-to-end; the KMeans-trained ``ivf_topk`` remains the data-adaptive
-    production path).
+    """IVF (inverted-file) ANN over a caller-supplied coarse quantizer:
+    corpus bucketed by nearest centroid, each query scores only its
+    ``nprobe`` nearest cells. The centroids come in as a DataFrame — fixed
+    (q72) or trained by :func:`kmeans_lloyd_det` (q51) — so the whole
+    pipeline is deterministic and SQL-expressible (both queries
+    cross-check it against DuckDB end-to-end). ``nprobe`` = the number of
+    cells probes everything and degenerates to the exact kNN.
 
     Scale shape: centroids collapse to ONE array-of-structs row that is
     broadcast-cross-joined — cell assignment is a per-row HOF argmin (the
@@ -337,36 +243,14 @@ def ivf_topk_fixed(
     per-query top-k window. Ties (equidistant centroids, equal scores)
     break on centroid/vector id — struct lexicographic order — so results
     are deterministic in both engines."""
-    from pyspark.sql import Window
-
-    def _sq(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    carr = F.broadcast(
-        centroids.agg(
-            F.collect_list(
-                F.struct(F.col(cent_id_col).alias("cid"), F.col(vec_col).alias("cv"))
-            ).alias("__cents")
-        )
-    )
-
-    def _dists(vec: Column) -> Column:
-        return F.transform(
-            F.col("__cents"),
-            lambda c: F.struct(_inf_null(_sq(vec, c["cv"])).alias("d"), c["cid"].alias("cid")),
-        )
-
+    carr = _centroid_array(centroids, cent_id_col, vec_col)
     cells = (
         corpus.select(id_col, vec_col)
         .crossJoin(carr)
         .select(
             id_col,
             vec_col,
-            F.array_min(_dists(F.col(vec_col)))["cid"].alias("__cell"),
+            _nearest(F.col(vec_col)).alias("__cell"),
             _norm(F.col(vec_col)).alias("__cnorm"),
         )
     )
@@ -381,15 +265,10 @@ def ivf_topk_fixed(
             query_id_col,
             "__qvec",
             "__qnorm",
-            F.explode(
-                F.transform(
-                    F.slice(F.array_sort(_dists(F.col("__qvec"))), 1, nprobe),
-                    lambda s: s["cid"],
-                )
-            ).alias("__cell"),
+            F.explode(_nearest_n(F.col("__qvec"), nprobe)).alias("__cell"),
         )
     )
-    # r14 zero-norm/NULL exclusion — see brute_force_topk
+    # r14 zero-norm/NULL exclusion — see brute_force_topk_blocked
     scored = probes.where(F.col("__qnorm") > 0).join(
         cells.where(F.col("__cnorm") > 0), "__cell"
     ).select(
@@ -400,14 +279,9 @@ def ivf_topk_fixed(
             / (F.col("__cnorm") * F.col("__qnorm"))
         ).alias("score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "score", "rank")
-    )
+    return _topk(
+        scored, query_id_col, [F.col("score").desc(), F.col(id_col).asc()], k
+    ).select(query_id_col, id_col, "score", "rank")
 
 
 def kmeans_lloyd_det(
@@ -419,84 +293,28 @@ def kmeans_lloyd_det(
     cent_id_col: str = "cent_id",
     round_dp: int = 6,
 ) -> DataFrame:
-    """Deterministic Lloyd k-means for the IVF coarse quantizer: start from
-    caller-supplied seed centroids (q51 uses the nlist lowest-id vectors —
-    data-independent given the table), run ``iters`` assign→mean rounds, and
-    ROUND each centroid coordinate to ``round_dp`` after every mean.
+    """Deterministic Lloyd k-means, the engine's trainer for the IVF coarse
+    quantizer and the SemDeDup cells: start from caller-supplied seed
+    centroids (q51 uses the nlist lowest-id vectors — data-independent
+    given the table), run ``iters`` assign→mean rounds, and ROUND each
+    centroid coordinate to ``round_dp`` after every mean, so the TRAINED
+    pipeline — not just a fixed quantizer — has a DuckDB oracle (q51,
+    q127, q151, q185, q278).
 
-    The rounding is what makes the whole training loop cross-engine
-    checkable: per-cell per-dimension means are order-dependent
-    accumulations (float policy: round BOTH sides), and once the centroids
-    are bit-identical, every downstream distance/argmin reuses the
-    bit-exact expression trees q72 already proved against DuckDB. Empty
-    cells simply drop out (both engines: the mean GROUP BY only sees
-    non-empty cells), so nlist can shrink — same behavior both sides.
-
-    Scale shape per round: centroids collapse to ONE broadcast row; cell
-    assignment is a per-row HOF argmin (corpus never shuffles for it); the
-    mean recompute shuffles nlist×dim tiny (cell, pos, sum) rows — for
-    nlist=1024, dim=1024 that is ~1M rows regardless of corpus size. The
-    corpus is rescanned once per round; persist upstream if it is not a
-    parquet scan. The data-adaptive MLlib path (:func:`ivf_topk`) remains
-    for production training; this twin exists so the TRAINED pipeline —
-    not just a fixed quantizer — has a DuckDB oracle (q51)."""
-
-    def _sq(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    cents = init_centroids.select(
-        F.col(cent_id_col).alias("cid"), F.col(vec_col).alias("cv")
-    )
-    for _ in range(iters):
-        carr = F.broadcast(
-            cents.agg(
-                F.collect_list(F.struct("cid", "cv")).alias("__cents")
-            )
-        )
-        assigned = corpus.select(id_col, vec_col).crossJoin(carr).select(
-            id_col,
-            vec_col,
-            F.array_min(
-                F.transform(
-                    F.col("__cents"),
-                    lambda c: F.struct(
-                        _inf_null(_sq(F.col(vec_col), c["cv"])).alias("d"),
-                        c["cid"].alias("cid"),
-                    ),
-                )
-            )["cid"].alias("__cell"),
-        )
-        cents = (
-            assigned.select("__cell", F.posexplode(vec_col).alias("pos", "v"))
-            .groupBy("__cell", "pos")
-            .agg(F.round(F.avg("v"), round_dp).alias("v"))
-            .groupBy("__cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "v"))),
-                    lambda s: s["v"],
-                ).alias("cv")
-            )
-            .select(F.col("__cell").alias("cid"), "cv")
-            # r14 (guide §2.4 / invariant 9's broadcast twin): each
-            # round's broadcast used to EMBED the previous round's whole
-            # plan, so the broadcast job re-executed every earlier
-            # assign+mean chain — quadratic re-execution in `iters` —
-            # and every downstream consumer (semdedup's carr,
-            # assign_cells, the PQ encode) re-ran the full training
-            # again. Checkpointing the nlist-row centroid frame per
-            # round costs one tiny job, makes training linear, and hands
-            # consumers a flat 8-row frame; values are bit-identical
-            # (materialization only).
-            .localCheckpoint(eager=True)
-        )
-    return cents.select(
-        F.col("cid").alias(cent_id_col), F.col("cv").alias(vec_col)
-    )
+    One training is the one-group case of :func:`kmeans_lloyd_det_stacked`
+    (constant group 0, dropped on return); the mechanics, scale shape and
+    per-round truncation are documented there."""
+    g = F.lit(0).alias("__grp")
+    return kmeans_lloyd_det_stacked(
+        corpus.select(g, id_col, vec_col),
+        init_centroids.select(g, cent_id_col, vec_col),
+        iters,
+        "__grp",
+        id_col,
+        vec_col,
+        cent_id_col,
+        round_dp,
+    ).drop("__grp")
 
 
 def embedding_near_dup_pairs(
@@ -511,7 +329,7 @@ def embedding_near_dup_pairs(
     """Embedding-cosine near-duplicate pairs: self-join within LSH buckets,
     verify cosine >= threshold. (id_a < id_b.)"""
     planes = random_hyperplanes(dim, n_planes, seed)
-    # r14 zero-norm/NULL exclusion — see brute_force_topk: a zero/NULL
+    # r14 zero-norm/NULL exclusion — see brute_force_topk_blocked: a zero/NULL
     # vector has no direction, so it can never clear a cosine threshold.
     b = df.select(
         F.col(id_col), F.col(vec_col), lsh_bucket(F.col(vec_col), planes).alias("__b"),
@@ -578,41 +396,18 @@ def quantize_embeddings(
     )
 
 
-def dequantize_embeddings(
-    qdf: DataFrame,
-    stats_src: DataFrame,
-    vec_col: str = "emb",
-    q_col: str = "qvec",
-    out_col: str = "emb_hat",
+def _cells(
+    corpus: DataFrame,
+    centroids: DataFrame,
+    id_col: str,
+    vec_col: str,
+    cent_id_col: str,
 ) -> DataFrame:
-    """Affine reconstruction x̂_i = mn_i + q_i/255·(mx_i − mn_i) using
-    per-dim stats recomputed from ``stats_src`` (the original embedding
-    frame or any same-distribution sample). Broadcast-joined like the
-    quantizer — no corpus shuffle."""
-    dims = (
-        stats_src.select(F.posexplode(vec_col).alias("pos", "x"))
-        .groupBy("pos")
-        .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
-    )
-    stats = dims.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "mn"))), lambda s: s["mn"]
-        ).alias("__mins"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "mx"))), lambda s: s["mx"]
-        ).alias("__maxs"),
-    )
-    deq = F.transform(
-        F.sequence(F.lit(1), F.size(q_col)),
-        lambda i: F.element_at("__mins", i)
-        + F.element_at(q_col, i).cast("double")
-        / 255.0
-        * (F.element_at("__maxs", i) - F.element_at("__mins", i)),
-    )
+    """(id, vector, cell): every vector with its nearest centroid's id."""
     return (
-        qdf.crossJoin(F.broadcast(stats))
-        .withColumn(out_col, deq)
-        .drop("__mins", "__maxs")
+        corpus.select(id_col, vec_col)
+        .crossJoin(_centroid_array(centroids, cent_id_col, vec_col))
+        .select(id_col, vec_col, _nearest(F.col(vec_col)).alias("cell"))
     )
 
 
@@ -632,37 +427,7 @@ def assign_cells(
     corpus never shuffles to pick a cell, and ties break on the lower
     centroid id (identical to the DuckDB oracle's
     ``row_number() OVER (ORDER BY d, cid)``)."""
-
-    def _sq(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    carr = F.broadcast(
-        centroids.agg(
-            F.collect_list(
-                F.struct(F.col(cent_id_col).alias("cid"), F.col(vec_col).alias("cv"))
-            ).alias("__cents")
-        )
-    )
-    return (
-        corpus.select(id_col, vec_col)
-        .crossJoin(carr)
-        .select(
-            id_col,
-            F.array_min(
-                F.transform(
-                    F.col("__cents"),
-                    lambda c: F.struct(
-                        _inf_null(_sq(F.col(vec_col), c["cv"])).alias("d"),
-                        c["cid"].alias("cid"),
-                    ),
-                )
-            )["cid"].alias("cell"),
-        )
-    )
+    return _cells(corpus, centroids, id_col, vec_col, cent_id_col).drop(vec_col)
 
 
 def semdedup_keep(
@@ -688,9 +453,9 @@ def semdedup_keep(
     what makes it tractable: candidate pairs exist only within a cell, so
     pair cost is sum(|cell|²) instead of n² — the paper's design, with the
     cell count chosen so cells stay bounded (√n cells of √n vectors each is
-    the classic operating point). Combine with :func:`kmeans_lloyd_det`
-    (deterministic, oracle-checkable — q127 cross-checks training AND
-    pruning against DuckDB) or the MLlib-trained quantizer for production.
+    the classic operating point). Train the cells with
+    :func:`kmeans_lloyd_det` (deterministic, oracle-checkable — q127
+    cross-checks training AND pruning against DuckDB).
 
     Scale shape: cell assignment is the broadcast-centroid per-row HOF
     argmin (corpus never shuffles to pick a cell); the pair join is an
@@ -698,38 +463,7 @@ def semdedup_keep(
     13); the prune set is a distinct-id semi-join. Skewed giant cells are
     the known failure mode — cap them upstream (more centroids) or salt via
     ``skew.salted_self_pairs``."""
-
-    def _sq(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    carr = F.broadcast(
-        centroids.agg(
-            F.collect_list(
-                F.struct(F.col(cent_id_col).alias("cid"), F.col(vec_col).alias("cv"))
-            ).alias("__cents")
-        )
-    )
-    cells = (
-        corpus.select(id_col, vec_col)
-        .crossJoin(carr)
-        .select(
-            id_col,
-            vec_col,
-            F.array_min(
-                F.transform(
-                    F.col("__cents"),
-                    lambda c: F.struct(
-                        _inf_null(_sq(F.col(vec_col), c["cv"])).alias("d"),
-                        c["cid"].alias("cid"),
-                    ),
-                )
-            )["cid"].alias("cell"),
-        )
-    ).persist()
+    cells = _cells(corpus, centroids, id_col, vec_col, cent_id_col).persist()
     # r14 zero-norm/NULL exclusion, PAIR SIDES ONLY: a zero/NULL vector
     # can neither be a near-duplicate nor prune one (its cosine is
     # undefined), but it keeps its row in the output (keep=true — same
@@ -899,25 +633,24 @@ def pq_topk_det(
     Per invariant 14 (HOFs are CodegenFallback, no subexpression
     elimination), every subvector slice is STAGED as its own column before
     the argmin lambda references it."""
-    from pyspark.sql import Window
-
     enc, qs = _pq_build(
         corpus, queries, dim, m, ksub, iters, id_col, vec_col, query_id_col
     )
     pairs = enc.drop(vec_col).crossJoin(F.broadcast(qs.drop(vec_col)))
+    return _adc_topk(pairs, m, k, id_col, query_id_col)
+
+
+def _adc_topk(
+    cand: DataFrame, m: int, k: int, id_col: str, query_id_col: str
+) -> DataFrame:
+    """ADC read path of the PQ family: approx distance = the sum of the
+    ``m`` per-subspace table lookups ``qd{s}[code{s}]``, top-k ascending
+    per query, ties on id."""
     ad = F.element_at(F.col("qd0"), F.col("code0"))
     for s in range(1, m):
         ad = ad + F.element_at(F.col(f"qd{s}"), F.col(f"code{s}"))
-    w = Window.partitionBy(query_id_col).orderBy(ad.asc(), F.col(id_col).asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(ad, 6).alias("approx_sqdist"),
-            "rank",
-        )
+    return _topk(cand, query_id_col, [ad.asc(), F.col(id_col).asc()], k).select(
+        query_id_col, id_col, F.round(ad, 6).alias("approx_sqdist"), "rank"
     )
 
 
@@ -1002,17 +735,7 @@ def _pq_train(
 def _pq_carr(cb_all: DataFrame) -> Column:
     """The single broadcast codebook array (g, cid, cv) used by every
     encode/distance-table projection."""
-    return F.broadcast(
-        cb_all.agg(
-            F.collect_list(
-                F.struct(
-                    F.col("grp").alias("g"),
-                    F.col("cent_id").alias("cid"),
-                    F.col("sub").alias("cv"),
-                )
-            ).alias("__cb")
-        )
-    )
+    return _centroid_array(cb_all, "cent_id", "sub", grp="grp", name="__cb")
 
 
 def _pq_encode(
@@ -1025,34 +748,18 @@ def _pq_encode(
     vec_col: str,
     query_id_col: str,
 ) -> tuple[DataFrame, DataFrame]:
-    def _sq(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     # NB: the HOF lambdas below MUST be single-parameter and close over the
     # staged column NAME via a factory — a `s=s` default on a two-parameter
     # lambda is silently overridden by the array index (invariant 3).
-    def _dist_struct_fn(sub_name: str) -> Callable[[Column], Column]:
-        def fn(c: Column) -> Column:
-            return F.struct(
-                _inf_null(_sq(F.col(sub_name), c["cv"])).alias("d"),
-                c["cid"].alias("cid"),
-            )
-
-        return fn
-
     def _entry_struct_fn(sub_name: str) -> Callable[[Column], Column]:
         # RAW distance, not _inf_null: these structs build the ADC
         # distance TABLES whose values reach the OUTPUT (approx_sqdist)
         # — a NULL query slice must emit NULL like the oracle, not +inf.
-        # Only argmin PICKS (the _dist_struct_fn above) coalesce to inf.
+        # Only argmin PICKS (_nearest) coalesce to inf.
         def fn(c: Column) -> Column:
             return F.struct(
                 c["cid"].alias("cid"),
-                _sq(F.col(sub_name), c["cv"]).alias("d"),
+                sqdist(F.col(sub_name), c["cv"]).alias("d"),
             )
 
         return fn
@@ -1065,10 +772,7 @@ def _pq_encode(
         enc = enc.withColumn(
             f"__sub{s}", F.slice(F.col(vec_col), s * d_sub + 1, d_sub)
         ).withColumn(
-            f"code{s}",
-            F.array_min(
-                F.transform(_grp_cb(s), _dist_struct_fn(f"__sub{s}"))
-            )["cid"],
+            f"code{s}", _nearest(F.col(f"__sub{s}"), _grp_cb(s))
         ).drop(f"__sub{s}")
     enc = enc.drop("__cb")
 
@@ -1114,15 +818,6 @@ def ivfpq_topk_det(
     shuffle), candidates flow through ONE equi-join on the cell id, and the
     only other exchange is the per-query top-k window. At 100 TB the
     candidate join reads m small code columns — not the vectors."""
-    from pyspark.sql import Window
-
-    def _sq(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     # the coarse quantizer trains as group id m INSIDE the same stacked
     # Lloyd plan as the m PQ codebooks (one training job, one checkpoint;
     # groups never mix so results are bit-identical to separate runs)
@@ -1138,56 +833,22 @@ def ivfpq_topk_det(
         corpus, dim, m, ksub, iters, id_col, vec_col,
         extra_stack=coarse_stack, extra_init=coarse_init,
     )
-    coarse = cb_all.where(F.col("grp") == m)
-    carr = F.broadcast(
-        coarse.agg(
-            F.collect_list(
-                F.struct(F.col("cent_id").alias("cid"), F.col("sub").alias("cv"))
-            ).alias("__cents")
-        )
-    )
-
-    def _dists(vec_name: str) -> Column:
-        return F.transform(
-            F.col("__cents"),
-            lambda c: F.struct(
-                _inf_null(_sq(F.col(vec_name), c["cv"])).alias("d"), c["cid"].alias("cid")
-            ),
-        )
-
+    carr = _centroid_array(cb_all.where(F.col("grp") == m), "cent_id", "sub")
     enc, qs = _pq_encode(
         corpus, queries, _pq_carr(cb_all.where(F.col("grp") < m)),
         m, dim // m, id_col, vec_col, query_id_col,
     )
     # cell assignment rides the SAME projection as the PQ encode — one scan
     cells = enc.crossJoin(carr).withColumn(
-        "__cell", F.array_min(_dists(vec_col))["cid"]
+        "__cell", _nearest(F.col(vec_col))
     ).drop("__cents", vec_col)
     probes = qs.crossJoin(carr).select(
         F.col(query_id_col),
         *[F.col(f"qd{s}") for s in range(m)],
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(_dists(vec_col)), 1, nprobe),
-                lambda s: s["cid"],
-            )
-        ).alias("__cell"),
+        F.explode(_nearest_n(F.col(vec_col), nprobe)).alias("__cell"),
     )
     cand = cells.join(F.broadcast(probes), "__cell")
-    ad = F.element_at(F.col("qd0"), F.col("code0"))
-    for s in range(1, m):
-        ad = ad + F.element_at(F.col(f"qd{s}"), F.col(f"code{s}"))
-    w = Window.partitionBy(query_id_col).orderBy(ad.asc(), F.col(id_col).asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(ad, 6).alias("approx_sqdist"),
-            "rank",
-        )
-    )
+    return _adc_topk(cand, m, k, id_col, query_id_col)
 
 
 def kmeans_lloyd_det_stacked(
@@ -1200,24 +861,32 @@ def kmeans_lloyd_det_stacked(
     cent_id_col: str = "cent_id",
     round_dp: int = 6,
 ) -> DataFrame:
-    """:func:`kmeans_lloyd_det` generalized to MANY INDEPENDENT trainings in
-    one plan: rows carry a ``grp_col`` and each group trains its own
-    centroids (seeds = caller-supplied per-group ``init_centroids``).
-    Groups never mix — per-(grp, cell, dim) means see exactly the rows a
-    per-group run would — so results are bit-identical to looping
-    :func:`kmeans_lloyd_det` per group, while the stage count stays constant
-    in the number of groups (PQ trains m=4+ codebooks; serial loops paid
-    ~4x scheduler overhead for identical arithmetic). Assignment filters
-    the single broadcast centroid array by group INSIDE the HOF — the
-    corpus still never shuffles to pick a cell."""
+    """Deterministic Lloyd k-means for MANY INDEPENDENT trainings in one
+    plan (:func:`kmeans_lloyd_det` is the one-group case): rows carry a
+    ``grp_col`` and each group trains its own centroids from
+    caller-supplied per-group ``init_centroids``, ``iters`` assign→mean
+    rounds, every centroid coordinate ROUNDED to ``round_dp`` after each
+    mean. Groups never mix — per-(grp, cell, dim) means see exactly the
+    rows a one-group run would — so each group gets the centroids of its
+    own run, while the stage count stays constant in the number of groups
+    (PQ trains m=4+ codebooks; serial loops paid ~4x scheduler overhead
+    for identical arithmetic).
 
-    def _sq(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+    The rounding is what makes the whole training loop cross-engine
+    checkable: per-cell per-dimension means are order-dependent
+    accumulations (float policy: round BOTH sides), and once the centroids
+    are bit-identical, every downstream distance/argmin reuses the
+    bit-exact expression trees q72 already proved against DuckDB. Empty
+    cells simply drop out (both engines: the mean GROUP BY only sees
+    non-empty cells), so nlist can shrink — same behavior both sides.
 
+    Scale shape per round: centroids collapse to ONE broadcast row;
+    assignment is a per-row HOF argmin over that array, filtered by group
+    INSIDE the HOF (the corpus never shuffles for it); the mean recompute
+    shuffles nlist×dim tiny (grp, cell, pos) rows — for nlist=1024,
+    dim=1024 that is ~1M rows regardless of corpus size. The corpus is
+    rescanned once per round; persist upstream if it is not a parquet
+    scan."""
     cents = init_centroids.select(
         F.col(grp_col).alias("g"),
         F.col(cent_id_col).alias("cid"),
@@ -1225,24 +894,10 @@ def kmeans_lloyd_det_stacked(
     )
     rows = stacked.select(grp_col, id_col, vec_col)
     for _ in range(iters):
-        carr = F.broadcast(
-            cents.agg(F.collect_list(F.struct("g", "cid", "cv")).alias("__cents"))
-        )
+        carr = _centroid_array(cents, "cid", "cv", grp="g")
+        own = F.filter(F.col("__cents"), lambda c: c["g"] == F.col(grp_col))
         assigned = rows.crossJoin(carr).select(
-            grp_col,
-            id_col,
-            vec_col,
-            F.array_min(
-                F.transform(
-                    F.filter(
-                        F.col("__cents"), lambda c: c["g"] == F.col(grp_col)
-                    ),
-                    lambda c: F.struct(
-                        _inf_null(_sq(F.col(vec_col), c["cv"])).alias("d"),
-                        c["cid"].alias("cid"),
-                    ),
-                )
-            )["cid"].alias("__cell"),
+            grp_col, id_col, vec_col, _nearest(F.col(vec_col), own).alias("__cell")
         )
         cents = (
             assigned.select(
@@ -1262,9 +917,16 @@ def kmeans_lloyd_det_stacked(
                 F.col("__cell").alias("cid"),
                 "cv",
             )
-            # r14: per-round checkpoint — see kmeans_lloyd_det (the
-            # un-truncated rounds re-executed quadratically through each
-            # round's broadcast job, and every consumer re-ran training).
+            # r14 (guide §2.4 / invariant 9's broadcast twin): each
+            # round's broadcast used to EMBED the previous round's whole
+            # plan, so the broadcast job re-executed every earlier
+            # assign+mean chain — quadratic re-execution in `iters` —
+            # and every downstream consumer (semdedup's centroid array,
+            # assign_cells, the PQ encode) re-ran the full training
+            # again. Checkpointing the centroid frame per round costs one
+            # tiny job, makes training linear, and hands consumers a flat
+            # nlist-row frame; values are bit-identical (materialization
+            # only).
             .localCheckpoint(eager=True)
         )
     return cents.select(
@@ -1290,19 +952,17 @@ def mine_hard_negatives(
     dissimilar enough to be true negatives (the standard pair-mining
     step for embedding-model training, e.g. SBERT/DPR recipes).
 
-    Same scale shape as :func:`brute_force_topk` (anchors broadcast,
-    corpus scanned once, the one shuffle keyed by anchor carrying only
-    (anchor, id, score) triples). The band + self-pair exclusion rides
-    a NULL-banded score rather than a WHERE on the join output: a plain
-    filter would be pushed INTO the broadcast join's condition, turning
-    the (legitimate, anchor-bounded) unconditional BNLJ into the
-    conditional-BNLJ shape the registry linter bans (invariant 13); the
-    null band sorts last under the rank and is dropped ABOVE the
-    window - same result, same plan family as q34.
-    Self-pairs are nulled explicitly (an anchor scores 1.0
+    Scale shape: anchors broadcast, corpus scanned once, the one
+    shuffle keyed by anchor carrying only (anchor, id, score) triples.
+    The band + self-pair exclusion rides a NULL-banded score rather than
+    a WHERE on the join output: a plain filter would be pushed INTO the
+    broadcast join's condition, turning the (legitimate, anchor-bounded)
+    unconditional BNLJ into the conditional-BNLJ shape the registry
+    linter bans (invariant 13); the null band sorts last under the rank
+    and is dropped ABOVE the window - same result. Self-pairs are nulled explicitly (an anchor scores 1.0
     against itself — outside any sane band, but the guard documents
     the contract). Ties break on the candidate id."""
-    # r14 zero-norm/NULL exclusion — see brute_force_topk: equals the
+    # r14 zero-norm/NULL exclusion — see brute_force_topk_blocked: equals the
     # oracle's NULL-cosine-fails-the-band semantics, without the ANSI
     # divide-by-zero throw.
     q = F.broadcast(
@@ -1337,14 +997,9 @@ def mine_hard_negatives(
             ).alias("score"),
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("score").isNotNull() & (F.col("rank") <= k))
+        _topk(scored, query_id_col, [F.col("score").desc(), F.col(id_col).asc()], k)
+        .where(F.col("score").isNotNull())
         .select(query_id_col, id_col, "score", "rank")
     )
 
@@ -1424,27 +1079,40 @@ def brute_force_topk_blocked(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """:func:`brute_force_topk` for LARGE query sets (the all-pairs /
-    self-kNN shape, q339): same contract, same bit-exact scores, blocked
-    numpy evaluation instead of a pair join + rank window.
+    """Exact cosine top-k — the engine's one exact kNN (q34, q63, q209,
+    q242, q339, and the recall reference of every approximate operator
+    here): per query, the ``k`` corpus vectors of highest cosine, as
+    (query_id, id, score, rank), ties broken on id ascending.
 
-    The join shape materializes |Q|·|C| rows through a CodegenFallback
-    HOF dot per pair and shuffles them into a rank window; with |Q| ≈
-    |C| ≈ n that is an O(n²)-row exchange. Here each task gets an
-    anchor slice × the full corpus (``_allpairs_tagged``) and computes
-    scores as a dimension-major loop of vectorized adds — acc starts at
-    0.0 and gains one a[k]·b[k] product per step, EXACTLY the
+    Blocked numpy evaluation: each task gets an anchor (query) slice ×
+    the full corpus (``_allpairs_tagged``) and computes scores as a
+    dimension-major loop of vectorized adds — acc starts at 0.0 and gains
+    one a[k]·b[k] product per step, EXACTLY the
     ``aggregate(zip_with(a, b, x*y), 0.0, acc+x)`` left fold's IEEE
-    sequence, so every score double is bit-identical to the HOF value
-    (same for the norm folds; the final ``dot/(cnorm·qnorm)`` chain is
-    the same tree). Ranking (score DESC, id ASC) happens in-task on
-    exact doubles — ±0.0 compare equal in numpy and in Spark's sort, so
-    tie-breaks agree — and only |Q|·k result rows ever reach the plan.
+    sequence that the DuckDB twins mirror, so every score double is
+    bit-identical to the HOF value (same for the norm folds; the final
+    ``dot/(cnorm·qnorm)`` chain is the same tree). Ranking (score DESC,
+    id ASC) happens in-task on exact doubles — ±0.0 compare equal in
+    numpy and in Spark's sort, so tie-breaks agree — and only |Q|·k
+    result rows ever reach the plan: no |Q|·|C| pair frame, no pair
+    join, no rank window. The corpus must fit one task's memory
+    (``_allpairs_tagged``'s license bound).
 
     Requires ``array<double>`` vectors (cast float embeddings first:
-    float-arithmetic HOF folds are NOT replicated here). Zero-norm /
-    NULL / NaN-poisoned vectors are excluded on both sides, exactly the
-    ``norm > 0`` guard of the join shape."""
+    float-arithmetic HOF folds are NOT replicated here).
+
+    Zero-norm / NULL exclusion (r14 dirty-embedding contract, shared by
+    every cosine ranker in this module): a vector with no positive norm
+    has no direction, so it can never be a cosine match. NULL, all-zero
+    and NULL-element vectors (Arrow hands NULL elements over as NaN) are
+    dropped on both sides — ``norm > 0`` is False for NaN, as the SQL
+    comparison is NULL for a NULL norm. Scoring them NULL instead would
+    leave NULL scores in rank orders whose NULL placement differs
+    cross-engine (Spark ASC NULLS FIRST, DuckDB LAST), and Spark ANSI
+    throws on the division anyway. Ragged rows zero-pad to the task's
+    longest vector (missing dimensions count as zeros); the registry
+    never sees one, because ``readers._quarantine_embeddings`` nulls
+    every wrong-length vector at scan."""
     fields = {f.name: f.dataType.simpleString() for f in corpus.schema.fields}
     qfields = {f.name: f.dataType.simpleString() for f in queries.schema.fields}
     out_schema = (

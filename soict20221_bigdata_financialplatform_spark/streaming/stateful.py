@@ -91,70 +91,3 @@ def running_symbol_stats(ticks: DataFrame) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def running_symbol_stats_tws(ticks: DataFrame) -> DataFrame:
-    """Same operator on Spark 4's ``transformWithStateInPandas`` — the
-    successor stateful API (SPARK-49211): typed named state (ValueState)
-    instead of one opaque tuple, per-key lifecycle hooks, optional timers.
-    Kept alongside the ``applyInPandasWithState`` form so both public
-    stateful surfaces are exercised; identical output contract
-    (equivalence-tested across micro-batches in
-    ``tests/test_stateful_streaming.py``).
-
-    State is one 5-field ValueState row per symbol — bounded by the symbol
-    universe, exactly like the GroupState form. RocksDB state store is the
-    API's backend requirement, and the TWS Python runtime additionally needs
-    ``google.protobuf`` (its state-server wire format) — absent in this
-    container, so the equivalence test import-skips there; the operator uses
-    only public API and runs wherever protobuf is installed."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class _RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("stats", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (symbol,) = key
-            if self._state.exists():
-                high, low, last_price, n_ticks, last_ts = self._state.get()
-            else:
-                high, low, last_price, n_ticks, last_ts = (
-                    float("-inf"), float("inf"), float("nan"), 0, None,
-                )
-            for pdf in rows:
-                # same NULL-price policy as the GroupState form above
-                pdf = pdf.dropna(subset=["close"])
-                if pdf.empty:
-                    continue
-                pdf = pdf.sort_values("time", kind="mergesort")
-                high = max(high, float(pdf["close"].max()))
-                low = min(low, float(pdf["close"].min()))
-                last_price = float(pdf["close"].iloc[-1])
-                n_ticks += len(pdf)
-                last_ts = pdf["time"].iloc[-1].to_pydatetime()
-            self._state.update((high, low, last_price, n_ticks, last_ts))
-            yield pd.DataFrame(
-                {
-                    "symbol": [symbol],
-                    "high": [high],
-                    "low": [low],
-                    "last_price": [last_price],
-                    "n_ticks": [n_ticks],
-                    "last_ts": [last_ts],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        ticks.select("symbol", "time", "close")
-        .groupBy("symbol")
-        .transformWithStateInPandas(
-            statefulProcessor=_RunningStats(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="update",
-            timeMode="none",
-        )
-    )

@@ -49,7 +49,6 @@ SLOW_TESTS = frozenset({
     "tests/test_chunking_properties.py::test_fixed_chunking_covers_every_position",
     "tests/test_dedup_similarity.py::test_ann_family_recall_table_sf01",
     "tests/test_dedup_similarity.py::test_ann_recall_floors_vs_bruteforce",
-    "tests/test_dedup_similarity.py::test_ivf_topk_recall_and_exact_degenerate",
     "tests/test_dirty_data.py::test_corpus_entry_points_tolerate_dirty_docs",
     "tests/test_equivalence_properties.py::test_asof_join_matches_bruteforce",
     "tests/test_equivalence_properties.py::test_asof_join_right_tiebreak_matches_bruteforce",

@@ -120,25 +120,41 @@ def _vecs(spark, n=50, dim=16, seed=3):
 
 
 def test_brute_force_topk_matches_numpy(spark):
+    """The exact kNN equals numpy's ranking, and tied scores break on
+    vec_id ascending: vector 50 duplicates vector 1, so both score
+    identically against every query."""
     corpus, m = _vecs(spark)
+    corpus = corpus.unionByName(
+        spark.createDataFrame([Row(vec_id=50, embedding=[float(x) for x in m[1]])])
+    )
+    m = np.vstack([m, m[1]])
+    ids = np.arange(len(m))
     queries = corpus.where("vec_id < 3").selectExpr(
         "vec_id as query_id", "embedding"
     )
-    got = sim.brute_force_topk(corpus, queries, k=5).collect()
+    got = sim.brute_force_topk_blocked(corpus, queries, k=5).collect()
     norms = np.linalg.norm(m, axis=1)
     for qid in range(3):
         scores = (m @ m[qid]) / (norms * norms[qid])
-        expect = list(np.argsort(-scores)[:5])
-        mine = [r.vec_id for r in sorted(
-            (r for r in got if r.query_id == qid), key=lambda r: r.rank)]
+        scores[50] = scores[1]  # the same vector: an exact tie in Spark too
+        expect = list(np.lexsort((ids, -scores))[:5])
+        rows = sorted((r for r in got if r.query_id == qid), key=lambda r: r.rank)
+        mine = [r.vec_id for r in rows]
         assert mine == expect
+        assert [r.rank for r in rows] == [1, 2, 3, 4, 5]
         assert mine[0] == qid  # self is rank 1
+    tied = sorted(
+        (r for r in got if r.query_id == 1 and r.vec_id in (1, 50)),
+        key=lambda r: r.rank,
+    )
+    assert [(r.vec_id, r.rank) for r in tied] == [(1, 1), (50, 2)]
+    assert tied[0].score == tied[1].score
 
 
 def test_lsh_topk_recall(spark):
     corpus, _ = _vecs(spark, n=100, dim=16)
     queries = corpus.where("vec_id < 5").selectExpr("vec_id as query_id", "embedding")
-    exact = sim.brute_force_topk(corpus, queries, k=5).collect()
+    exact = sim.brute_force_topk_blocked(corpus, queries, k=5).collect()
     approx = sim.lsh_topk(corpus, queries, k=5, n_planes=4, dim=16).collect()
     # self-match always lands in the query's own bucket
     for qid in range(5):
@@ -192,30 +208,11 @@ def test_embedding_near_dup_lsh_subset_of_exact_with_dup_recall(spark):
     assert {(0, 900), (1, 901), (2, 902)} <= lsh  # identical pairs: full recall
 
 
-def test_ivf_topk_recall_and_exact_degenerate(spark):
-    corpus, _ = _vecs(spark, n=100, dim=16)
-    queries = corpus.where("vec_id < 5").selectExpr("vec_id as query_id", "embedding")
-    exact = sim.brute_force_topk(corpus, queries, k=5).collect()
-    # nprobe == nlist probes every cell -> identical to brute force
-    full = sim.ivf_topk(corpus, queries, k=5, nlist=8, nprobe=8, seed=7).collect()
-    assert {(r.query_id, r.vec_id, r.rank) for r in full} == {
-        (r.query_id, r.vec_id, r.rank) for r in exact
-    }
-    # narrow probe: self always found, decent recall
-    approx = sim.ivf_topk(corpus, queries, k=5, nlist=8, nprobe=2, seed=7).collect()
-    for qid in range(5):
-        mine = [r.vec_id for r in approx if r.query_id == qid]
-        assert qid in mine
-    e = {(r.query_id, r.vec_id) for r in exact}
-    a = {(r.query_id, r.vec_id) for r in approx}
-    assert len(e & a) / len(e) >= 0.4
-
-
 def test_lsh_multiprobe_improves_recall(spark):
     corpus, _ = _vecs(spark, n=200, dim=16, seed=11)
     queries = corpus.where("vec_id < 10").selectExpr("vec_id as query_id", "embedding")
     exact = {(r.query_id, r.vec_id)
-             for r in sim.brute_force_topk(corpus, queries, k=5).collect()}
+             for r in sim.brute_force_topk_blocked(corpus, queries, k=5).collect()}
     one = {(r.query_id, r.vec_id)
            for r in sim.lsh_topk(corpus, queries, k=5, n_planes=6, dim=16).collect()}
     multi = {(r.query_id, r.vec_id)
@@ -231,7 +228,7 @@ def test_ivf_topk_fixed_exact_degenerate_and_self_recall(spark):
     corpus, _ = _vecs(spark, n=100, dim=16)
     queries = corpus.where("vec_id < 5").selectExpr("vec_id as query_id", "embedding")
     cents = corpus.where("vec_id < 8").selectExpr("vec_id as cent_id", "embedding")
-    exact = sim.brute_force_topk(corpus, queries, k=5).collect()
+    exact = sim.brute_force_topk_blocked(corpus, queries, k=5).collect()
     # nprobe == nlist probes every cell -> identical to brute force
     full = sim.ivf_topk_fixed(corpus, queries, cents, k=5, nprobe=8).collect()
     assert {(r.query_id, r.vec_id, r.rank) for r in full} == {
@@ -259,7 +256,7 @@ def test_kmeans_lloyd_det_trains_and_serves(spark):
     assert 1 <= len(got) <= 6
     assert all(len(r.embedding) == 16 for r in got)
     queries = corpus.where("vec_id < 5").selectExpr("vec_id as query_id", "embedding")
-    exact = sim.brute_force_topk(corpus, queries, k=5).collect()
+    exact = sim.brute_force_topk_blocked(corpus, queries, k=5).collect()
     full = sim.ivf_topk_fixed(
         corpus, queries, cents, k=5, nprobe=len(got)
     ).collect()
@@ -275,7 +272,7 @@ def test_quantized_embeddings_preserve_topk_recall(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from soict20221_bigdata_financialplatform_spark.operators.similarity import (
-        brute_force_topk,
+        brute_force_topk_blocked,
         quantize_embeddings,
     )
     from soict20221_bigdata_financialplatform_spark.sources import load_table
@@ -313,8 +310,8 @@ def test_quantized_embeddings_preserve_topk_recall(spark, sf_dir):
     dq_queries = deq.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    exact = brute_force_topk(emb, queries, k=5)
-    approx = brute_force_topk(deq, dq_queries, k=5)
+    exact = brute_force_topk_blocked(emb, queries, k=5)
+    approx = brute_force_topk_blocked(deq, dq_queries, k=5)
     ex = {(r.query_id, r.vec_id) for r in exact.collect()}
     ap = {(r.query_id, r.vec_id) for r in approx.collect()}
     recall = len(ex & ap) / len(ex)

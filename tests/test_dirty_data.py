@@ -100,30 +100,21 @@ def test_clean_corpus_drops_dirty_keeps_survivor(dirty_docs):
     assert ids <= {1, 2, 6} and 6 in ids and len(ids & {1, 2}) == 1
 
 
-def test_ivf_topk_null_corpus_rows_excluded(spark, emb_frames):
-    """MLlib KMeans.fit throws FAILED_EXECUTE_UDF on a NULL feature row —
-    one dirty row would kill the whole training job. ivf_topk drops NULL
-    embeddings up front; results over (clean ∪ NULLs) must equal results
-    over clean alone."""
-    clean, dirty = emb_frames
-    queries = spark.createDataFrame(
-        [(0, [0.5, 0.4, 0.3, 0.2])], "query_id long, embedding array<float>"
-    )
-    res = lambda c: sorted(
-        (r.query_id, r.vec_id, r.rank)
-        for r in sim.ivf_topk(c, queries, k=3, nlist=4).collect()
-    )
-    assert res(dirty) == res(clean)
+def _as_double(df):
+    """The exact kNN scores ``array<double>`` only (it replicates the
+    double HOF fold); the registry queries cast the same way."""
+    return df.withColumn("embedding", F.col("embedding").cast("array<double>"))
 
 
 def test_brute_force_topk_null_rows_sink(spark, emb_frames):
-    """The exact scorer keeps NULL rows but their score is NULL, which
-    sorts below every real score — the top-k never surfaces them."""
+    """The exact kNN drops NULL vectors before scoring (no direction, so
+    never a cosine match) — the top-k never surfaces them, and every
+    returned score is real."""
     clean, dirty = emb_frames
     queries = spark.createDataFrame(
-        [(0, [0.5, 0.4, 0.3, 0.2])], "query_id long, embedding array<float>"
+        [(0, [0.5, 0.4, 0.3, 0.2])], "query_id long, embedding array<double>"
     )
-    got = sim.brute_force_topk(dirty, queries, k=3).collect()
+    got = sim.brute_force_topk_blocked(_as_double(dirty), queries, k=3).collect()
     assert len(got) == 3
     assert all(r.vec_id not in (98, 99) for r in got)
     assert all(r.score is not None for r in got)
@@ -247,8 +238,16 @@ def test_semdedup_dirty_rows_never_affect_clean(spark, emb_frames):
 def test_brute_force_topk_ragged_and_null_element_rows_sink(
     spark, emb_frames
 ):
-    """Ragged (wrong-length) and NULL-element embeddings score NULL
-    (zip_with pads with NULL) and can never displace a real top-k row."""
+    """What the exact kNN does with malformed vectors. A NULL-element
+    vector (96; Arrow hands the NULL over as NaN) has a NaN norm and is
+    dropped like a NULL one (98). A ragged vector (97) is ZERO-padded to
+    the longest length and scored as that padded vector (a ``zip_with``
+    fold would pad with NULL and score it NULL). The registry
+    never sees a ragged row: ``readers._quarantine_embeddings`` nulls
+    every wrong-length vector at scan, so this pins library behaviour
+    only."""
+    import numpy as np
+
     clean, _ = emb_frames
     dirty = clean.unionByName(
         spark.createDataFrame(
@@ -256,13 +255,37 @@ def test_brute_force_topk_ragged_and_null_element_rows_sink(
             EMB_SCHEMA,
         )
     )
+    qv = [0.5, 0.4, 0.3, 0.2]
     queries = spark.createDataFrame(
-        [(0, [0.5, 0.4, 0.3, 0.2])], "query_id long, embedding array<float>"
+        [(0, qv)], "query_id long, embedding array<double>"
     )
-    got = sim.brute_force_topk(dirty, queries, k=5).collect()
-    assert len(got) == 5
-    assert all(r.vec_id not in (96, 97, 98) for r in got)
-    assert all(r.score is not None for r in got)
+    got = sim.brute_force_topk_blocked(_as_double(dirty), queries, k=30).collect()
+    assert {r.vec_id for r in got} == set(range(20)) | {97}
+    assert [r.rank for r in sorted(got, key=lambda r: r.rank)] == list(
+        range(1, 22)
+    )
+
+    def fold_cos(q, c):  # the left folds; c is float32 data widened
+        c = np.float32(c).astype(np.float64)
+        dot = na = nb = 0.0
+        for x, y in zip(q, c):
+            dot += x * y
+            na += x * x
+            nb += y * y
+        return dot / (np.sqrt(nb) * np.sqrt(na))
+
+    by_id = {r.vec_id: r for r in got}
+    assert by_id[97].score == fold_cos(qv, [0.1, 0.2, 0.0, 0.0])
+    # the clean rows keep their exact scores and their relative order
+    clean_got = sim.brute_force_topk_blocked(
+        _as_double(clean), queries, k=30
+    ).collect()
+    assert {r.vec_id: r.score for r in clean_got} == {
+        i: by_id[i].score for i in range(20)
+    }
+    assert [r.vec_id for r in sorted(clean_got, key=lambda r: r.rank)] == [
+        r.vec_id for r in sorted(got, key=lambda r: r.rank) if r.vec_id != 97
+    ]
 
 
 def test_connected_components_drops_null_pairs(spark):

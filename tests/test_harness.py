@@ -1,15 +1,19 @@
 """Pins for the measurement and test harnesses themselves: the slow-test
 list in conftest.py must name real tests (under the full run, `-m ""`, a
 stale entry fails collection, so a renamed slow test cannot slip back into
-the driver-facing fast suite unnoticed), and bench.py's load sentinel flags
-a flight whose final re-time disagrees with its min or its steady value."""
+the driver-facing fast suite unnoticed), bench.py's load sentinel flags
+a flight whose final re-time disagrees with its min or its steady value,
+and the sources compile without warnings."""
 
 from __future__ import annotations
 
+import glob
 import os
+import warnings
 
 import bench
 import conftest
+import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -41,3 +45,24 @@ def test_sentinel_flags_final_far_above_steady():
     assert not bench.sentinel_polluted(2.0, 1.8, 2.5)
     # 50 ms floor: sub-floor jitter never flags
     assert not bench.sentinel_polluted(0.01, 0.01, 0.07)
+
+
+@pytest.mark.parametrize("pattern", [
+    "soict20221_bigdata_financialplatform_spark/**/*.py",
+    "bench.py",
+    "tools/**/*.py",
+])
+def test_sources_compile_without_warnings(pattern):
+    """An invalid string escape such as ``\\p`` is a DeprecationWarning at
+    compile time (a SyntaxWarning from Python 3.12, and slated to become an
+    error). Compile every engine, bench and tools source with both as
+    errors."""
+    paths = sorted(glob.glob(os.path.join(ROOT, pattern), recursive=True))
+    assert paths
+    for path in paths:
+        with open(path, encoding="utf-8") as f:
+            src = f.read()
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", SyntaxWarning)
+            warnings.simplefilter("error", DeprecationWarning)
+            compile(src, path, "exec")

@@ -95,68 +95,6 @@ def test_synthetic_tick_stream_and_enrichment(spark, tmp_path):
     assert all(r.close is not None for r in rows)  # wire roundtrip decoded
 
 
-def test_running_stats_tws_across_batches(spark, tmp_path):
-    """transformWithStateInPandas twin: identical contract to the
-    applyInPandasWithState form — state carries across micro-batches.
-    Skipped where the TWS runtime's protobuf dependency is absent (this
-    container); the operator itself is plain public API."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState runtime needs protobuf (not in container)",
-    )
-
-    from soict20221_bigdata_financialplatform_spark.streaming.stateful import (
-        running_symbol_stats_tws,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    src = tmp_path / "src"
-    src.mkdir()
-    _write_file(str(src), "b1.json", [
-        _msg("FPT", "2024-01-02 09:30:05", "80.0"),
-        _msg("FPT", "2024-01-02 09:30:25", "82.0"),
-        _msg("VIC", "2024-01-02 09:30:10", "55.0"),
-    ])
-    raw = st.read_tick_stream_json(spark, str(src), max_files_per_trigger=1)
-    try:
-        stats = running_symbol_stats_tws(st.decode_ticks(raw))
-        q = (
-            stats.writeStream.outputMode("update")
-            .format("memory")
-            .queryName("running_stats_tws")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            _write_file(str(src), "b2.json", [
-                _msg("FPT", "2024-01-02 09:31:00", "79.0"),  # new low
-            ])
-            q.processAllAvailable()
-            rows = spark.sql("SELECT * FROM running_stats_tws").collect()
-        finally:
-            q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-    fpt = [r for r in rows if r.symbol == "FPT"]
-    final = max(fpt, key=lambda r: r.n_ticks)
-    assert final.n_ticks == 3
-    assert final.high == 82.0 and final.low == 79.0
-    assert final.last_price == 79.0
-    vic = [r for r in rows if r.symbol == "VIC"]
-    assert max(v.n_ticks for v in vic) == 1
-
-
 def test_running_stats_state_survives_query_restart(spark, tmp_path):
     """Custom GroupState must survive a query RESTART from checkpoint —
     a different failure mode than the windowed-agg restart test
