@@ -14,9 +14,15 @@ Responses are JSON arrays of row objects. Every endpoint is LIMIT-bounded
 by construction (1 / n / 6 / 2000 rows), so the driver-side collect here is
 the serving contract, not an anti-pattern — the heavy lifting (partition
 pruning on symbol, row-group pruning on the date ordering) happened in the
-lazy plan before the collect. For production QPS put a real ASGI server and
-a result cache in front; the plan-building functions in :mod:`api` are the
-stable seam either way.
+lazy plan before the collect.
+
+Every request calls :mod:`api`. The three point reads come back as prepared
+routes, one planned DataFrame per mounted frame and route arguments with its
+scan already opened, so a repeated request skips the build, the planning and
+the scan set-up. Every request still runs its own Spark job over the
+mounted files: no result is cached here or in :mod:`api`, and ``/news`` is
+built per request. Mount a freshly loaded frame after a backfill; the old
+frame's routes go with it.
 """
 
 from __future__ import annotations

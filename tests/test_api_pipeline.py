@@ -8,6 +8,7 @@ import json
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from soict20221_bigdata_financialplatform_spark import api
 from soict20221_bigdata_financialplatform_spark.sources.readers import (
@@ -171,3 +172,167 @@ def test_read_evolving_parquet_merges_schema_versions(spark, tmp_path):
     assert rows[1].lang is None and rows[2].lang == "en"
     # filter on the evolved column only matches files that have it
     assert df.where(df.lang == "en").count() == 1
+
+
+# ---------------------------------------------------------------------------
+# Prepared routes: olhc/realtime/info return one planned DataFrame per
+# (frame, route arguments); every call still runs its own job.
+# ---------------------------------------------------------------------------
+
+
+def _group_stats(spark, group: str) -> tuple[int, int, int]:
+    """(jobs, input records, shuffle write bytes) of the jobs run under the
+    job group ``group``."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    records = shuffled = 0
+    for job in jobs:
+        for stage in sc.statusTracker().getJobInfo(job).stageIds:
+            try:
+                st = store.lastStageAttempt(stage)
+            except Exception:  # noqa: BLE001 - a skipped stage has no attempt
+                continue
+            records += st.inputRecords()
+            shuffled += st.shuffleWriteBytes()
+    return len(jobs), records, shuffled
+
+
+def _run_in_group(spark, group: str, df):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        return df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+@pytest.fixture(scope="module")
+def stored(spark, tmp_path_factory):
+    """Symbol-partitioned bars and ticks on disk, the serving store's shape."""
+    out = tmp_path_factory.mktemp("store")
+    spark.createDataFrame(
+        [Row(symbol=s, date=datetime.date(2024, 1, d), close=float(10 * i + d))
+         for i, s in enumerate(["AAA", "BBB"]) for d in range(1, 29)]
+    ).write.partitionBy("symbol").parquet(str(out / "bars"))
+    spark.createDataFrame(
+        [Row(symbol=s, time=datetime.datetime(2024, 1, 2, 9, m), price=float(m))
+         for s in ("AAA", "BBB") for m in range(30)]
+    ).write.partitionBy("symbol").parquet(str(out / "ticks"))
+    return str(out / "bars"), str(out / "ticks")
+
+
+def test_prepared_route_is_reused_and_runs_a_job_every_call(spark, stored):
+    bars_path, ticks_path = stored
+    bars, ticks = api.load_bars(spark, bars_path), spark.read.parquet(ticks_path)
+    routes = [
+        (lambda: api.olhc(bars, "AAA", 3), 3),
+        (lambda: api.info(bars, "BBB"), 28),
+        (lambda: api.realtime(ticks, "AAA"), 1),
+    ]
+    for k, (route, n_rows) in enumerate(routes):
+        first = route()
+        assert route() is first  # same arguments, same prepared frame
+        for call in range(3):
+            group = f"prepared-{k}-{call}"
+            assert len(_run_in_group(spark, group, route())) == n_rows
+            jobs, scanned, _ = _group_stats(spark, group)
+            # no result is reused: each call launches a job that reads rows
+            assert jobs >= 1 and scanned >= n_rows, (group, jobs, scanned)
+    # different arguments are different routes
+    assert api.olhc(bars, "AAA", 4) is not api.olhc(bars, "AAA", 3)
+    assert api.olhc(bars, "BBB", 3) is not api.olhc(bars, "AAA", 3)
+
+
+def test_prepared_route_concurrent_calls_match_a_fresh_build(spark, stored):
+    """8 threads (more than the session's 4 cores) start together on one
+    cold route: every call answers like a fresh build, and all of them share
+    the one prepared frame the route keeps."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    bars = api.load_bars(spark, stored[0])  # a new frame: the route starts cold
+    fresh = (bars.where(F.col("symbol") == "BBB")
+             .orderBy(F.col("date").desc()).limit(6).collect())
+    assert len(fresh) == 6
+    start = threading.Barrier(8, timeout=60)
+
+    def client(_):
+        start.wait()
+        calls = []
+        for _ in range(20):
+            df = api.olhc(bars, "BBB", 6)
+            calls.append((df, df.collect()))
+        return calls
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            calls = [c for per_thread in pool.map(client, range(8), timeout=300) for c in per_thread]
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(calls) == 160
+    assert all(rows == fresh for _, rows in calls)
+    assert len({id(df) for df, _ in calls}) == 1
+    assert list(api._routes[bars]) == [("BBB", "date", 6)]
+
+
+def test_prepared_routes_do_not_outlive_a_backfill(spark, tmp_path):
+    """No stale read after a backfill: a frame reloaded after a backfill into
+    the same path reads the new rows; the old frame's routes go with it."""
+    import gc
+    import weakref
+
+    out = str(tmp_path / "historical")
+    v2_rows = [r.asDict() | {"close": "9" + r["close"].strip()} for r in RAW_ROWS]
+    v2_rows.append(v2_rows[0] | {"date": "08/02/2023"})
+
+    api.backfill(spark.createDataFrame(RAW_ROWS), out, ema_n=3, rsi_n=3, sma_n=3)
+    bars_v1 = api.load_bars(spark, out)
+    v1 = [(r.date, r.close) for r in api.olhc(bars_v1, "FPT", 5).collect()]
+    assert v1 == [(datetime.date(2023, 2, 7), 80.7), (datetime.date(2023, 2, 6), 80.0)]
+
+    api.backfill(spark.createDataFrame([Row(**r) for r in v2_rows]), out,
+                 ema_n=3, rsi_n=3, sma_n=3)
+    bars_v2 = api.load_bars(spark, out)
+    v2 = [(r.date, r.close) for r in api.olhc(bars_v2, "FPT", 5).collect()]
+    assert v2 == [(datetime.date(2023, 2, 8), 980.7), (datetime.date(2023, 2, 7), 980.7),
+                  (datetime.date(2023, 2, 6), 980.0)]
+
+    gone = weakref.ref(bars_v1)
+    del bars_v1
+    gc.collect()
+    assert gone() is None  # the route memo holds no frame alive
+
+
+def test_prepared_routes_are_bounded_per_frame(spark, stored):
+    bars = api.load_bars(spark, stored[0])
+    bound = api.PREPARED_ROUTES
+    for n in range(1, bound + 1):
+        api.olhc(bars, "AAA", n)
+    api.olhc(bars, "AAA", 1)  # touched: now the most recently used
+    for n in range(bound + 1, bound + 6):
+        api.olhc(bars, "AAA", n)
+    kept = {key[2] for key in api._routes[bars]}
+    assert len(kept) == bound
+    assert 1 in kept and bound + 5 in kept
+    assert not {2, 3, 4, 5, 6} & kept  # the least recently used went
+
+
+def test_news_calls_each_run_their_own_shuffle(spark):
+    news = spark.createDataFrame(
+        [Row(title=f"t{i % 40}", time=datetime.datetime(2024, 1, 1) + datetime.timedelta(minutes=i),
+             source="s") for i in range(200)]
+    )
+    answers = []
+    for call in range(2):
+        group = f"news-{call}"
+        answers.append(_run_in_group(spark, group, api.news_latest(news)))
+        jobs, _, shuffled = _group_stats(spark, group)
+        # a re-executed adaptive plan would read the last call's shuffle output
+        assert jobs >= 1 and shuffled > 0, (group, jobs, shuffled)
+    assert answers[0] == answers[1] and len(answers[0]) == 6

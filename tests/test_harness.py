@@ -3,12 +3,15 @@ list in conftest.py must name real tests (under the full run, `-m ""`, a
 stale entry fails collection, so a renamed slow test cannot slip back into
 the driver-facing fast suite unnoticed), bench.py's load sentinel flags
 a flight whose final re-time disagrees with its min or its steady value,
-and the sources compile without warnings."""
+the sources compile without warnings, and parity_check's verdict lines
+survive a merged stderr."""
 
 from __future__ import annotations
 
 import glob
 import os
+import subprocess
+import sys
 import warnings
 
 import bench
@@ -66,3 +69,19 @@ def test_sources_compile_without_warnings(pattern):
             warnings.simplefilter("error", SyntaxWarning)
             warnings.simplefilter("error", DeprecationWarning)
             compile(src, path, "exec")
+
+
+def test_parity_check_pass_line_starts_a_line(sf_dir):
+    """Spark's console progress bar writes to stderr without a newline; with
+    ``2>&1`` it must not glue itself in front of a verdict, or a
+    ``grep ^PASS`` count drops that query."""
+    out = subprocess.run(
+        [sys.executable, os.path.join(ROOT, "tools", "parity_check.py"), sf_dir,
+         "q01_pricing_summary"],
+        stdout=subprocess.PIPE, stderr=subprocess.STDOUT, timeout=600,
+    )
+    assert out.returncode == 0, out.stdout[-2000:]
+    # bytes split on b"\n" only, as grep reads them: text mode and
+    # splitlines() would also break lines at the bar's carriage returns
+    lines = out.stdout.split(b"\n")
+    assert any(line.startswith(b"PASS q01_pricing_summary") for line in lines), out.stdout[-2000:]

@@ -30,6 +30,10 @@ from soict20221_bigdata_financialplatform_spark.queries import ORACLE, QUERIES
 from soict20221_bigdata_financialplatform_spark.session import get_spark
 from soict20221_bigdata_financialplatform_spark.sources import TABLES
 
+# Spark's console progress bar writes to stderr without a newline, so with
+# stderr merged into stdout it would glue itself in front of a PASS/FAIL line.
+QUIET = {"spark.ui.showConsoleProgress": "false"}
+
 
 def _register_views(con, sf_dir: str) -> None:
     """DuckDB twins of the engine's table loaders. events.value carries the
@@ -121,7 +125,7 @@ def _spark_to_duck(t: str):
 
 
 def audit(sf_dir: str, only) -> int:
-    spark = get_spark("type-audit")
+    spark = get_spark("type-audit", extra_conf=QUIET)
     con = duckdb.connect()
     _register_views(con, sf_dir)
     n_ok = n_flag = 0
@@ -207,7 +211,7 @@ def main() -> int:
     only = set(argv[1:])
     if do_audit:
         return audit(sf_dir, only)
-    spark = get_spark("parity-check")
+    spark = get_spark("parity-check", extra_conf=QUIET)
     con = duckdb.connect()
     _register_views(con, sf_dir)
 
