@@ -84,19 +84,23 @@ def realtime(ticks: DataFrame, symbol: str) -> DataFrame:
 def news_latest(news: DataFrame, n: int = 6) -> DataFrame:
     """``/news``: latest n headlines, deduped by title — the upsert-by-title
     semantics of PRIMARY KEY (TITLE, TIME) (reference API.py:52-62,
-    warehouse.py:93-100). Deterministic survivor: newest time per title.
+    warehouse.py:93-100). Deterministic survivor: newest time per title, a
+    (title, time) tie going to the smallest remaining columns, left to
+    right; the survivors are ordered newest first, then by title. Both
+    orders are total, so the answer does not depend on partitioning.
 
     Built on every call, not prepared: the title window plans an Exchange
     under AQE, and re-executing a finished adaptive plan reads the previous
     call's shuffle output, which would make it a result cache."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy("title").orderBy(F.col("time").desc())
+    rest = [c for c in news.columns if c not in ("title", "time")]
+    w = Window.partitionBy("title").orderBy(F.col("time").desc(), *rest)
     return (
         news.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
         .drop("__rn")
-        .orderBy(F.col("time").desc())
+        .orderBy(F.col("time").desc(), "title")
         .limit(n)
     )
 

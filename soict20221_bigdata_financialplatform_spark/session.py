@@ -13,6 +13,12 @@ Settings are chosen for correctness-at-scale first:
 - ``spark.sql.session.timeZone=UTC`` so timestamp semantics are independent of
   the host and match the DuckDB oracle.
 - Arrow enabled for every pandas interchange (indicator EWM path, toPandas).
+- ``spark.sql.codegen.cache.maxEntries`` = ``CODEGEN_CACHE_MAX_ENTRIES``, so a
+  repeated query reuses its compiled classes instead of recompiling them
+  (Spark's default of 100 is smaller than the frozen 17's 206). Every run
+  still plans and executes its own jobs; only the Java source to bytecode
+  step is skipped. The cache is a JVM-wide singleton sized at its first use:
+  the setting only takes effect in a session that starts its JVM.
 """
 
 from __future__ import annotations
@@ -22,6 +28,15 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+
+# Generated classes kept compiled, keyed by their Java source. Measured
+# working sets (sf0.001, distinct classes): the frozen 17 compile 206, the
+# `serve` endpoints 66, all 344 registry queries 4,577. A loaded class costs
+# about 15 KB of metaspace (982 -> 4,577 classes: 207 -> 263 MB), so the
+# next power of two above the registry, 8,192, bounds the cache at about
+# 120 MB when full. With Spark's default of 100, every warm pass over the
+# frozen 17 recompiled 134-180 classes at about 8 ms each.
+CODEGEN_CACHE_MAX_ENTRIES = 8192
 
 
 def get_spark(
@@ -62,6 +77,7 @@ def get_spark(
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -73,6 +73,20 @@ def test_news_latest_dedup_by_title(spark):
     assert rally.source == "b"  # newest wins (upsert-by-title semantics)
 
 
+def test_news_latest_ties_are_broken_the_same_at_any_partitioning(spark):
+    t0 = datetime.datetime(2024, 1, 1, 9)
+    rows = [Row(time=t0, title=f"t{k}", source=s, img="x")
+            for k in range(10) for s in ("c", "a", "b")]  # (title, time) ties
+    rows += [Row(time=t0 - datetime.timedelta(hours=1), title=f"t{k}", source="0", img="x")
+             for k in range(10)]
+    news = spark.createDataFrame(rows)
+    answers = [api.news_latest(news.repartition(p), n=6).collect() for p in (1, 7)]
+    assert answers[0] == answers[1]
+    # ten titles tie on the newest time: the limit keeps the first six titles,
+    # each with its smallest source
+    assert [(r.title, r.source) for r in answers[0]] == [(f"t{k}", "a") for k in range(6)]
+
+
 def test_read_bars_json_reference_format(spark, tmp_path):
     # the reference's data/data_olhc/*.json: multiline array of all-string objs
     p = tmp_path / "FPT.json"

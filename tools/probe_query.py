@@ -6,7 +6,10 @@ Usage::
     python tools/probe_query.py [--sf DIR] [--reps N] [--explain PATH]
                                 [--warm N] q252_bernoulli_sample_store [...]
 
-Prints one line per query: min / median of the timed reps. With
+Prints one line per query: min / median of the timed reps, and the
+classes the warm runs and the timed reps compiled with their compile ms
+(Spark's ``CodegenMetrics``; the reps of a repeated query should compile
+none, see ``session.CODEGEN_CACHE_MAX_ENTRIES``). With
 ``--explain DIR`` writes ``DIR/<query>.txt`` containing the formatted
 physical plan (the round's ``plans/r*/`` evidence files). Timing method
 is bench.py's: ``df.write.format("noop").mode("overwrite").save()``,
@@ -25,6 +28,25 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from soict20221_bigdata_financialplatform_spark.queries import QUERIES
 from soict20221_bigdata_financialplatform_spark.session import get_spark
+
+
+# Dropwizard's default histogram reservoir: it holds every compile time
+# until the JVM has compiled this many classes, then starts sampling.
+_RESERVOIR = 1028
+
+
+def _codegen(spark) -> tuple[int, float]:
+    """(classes compiled, their summed compile ms) in this JVM so far."""
+    jvm = spark._jvm
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    values = jvm.java.util.Arrays.toString(hist.getSnapshot().getValues()).strip("[]")
+    return hist.getCount(), float(sum(int(v) for v in values.split(",") if v))
+
+
+def _compiled(spark, before: tuple[int, float]) -> str:
+    count, ms = _codegen(spark)
+    approx = "~" if count > _RESERVOIR else ""
+    return f"{count - before[0]} ({approx}{ms - before[1]:.0f} ms)"
 
 
 def main() -> None:
@@ -60,18 +82,23 @@ def main() -> None:
             ).save()
 
         spark.sparkContext.setJobDescription(f"probe:{name}")
+        before = _codegen(spark)
         for _ in range(args.warm):
             run()
+        warm_compiled = _compiled(spark, before)
         samples = []
+        before = _codegen(spark)
         for _ in range(args.reps):
             t0 = time.time()
             run()
             samples.append(time.time() - t0)
+        rep_compiled = _compiled(spark, before)
         spark.sparkContext.setJobDescription(None)
         print(
             f"{name}: min={min(samples):.3f} "
             f"median={statistics.median(samples):.3f} "
-            f"all={[round(s, 3) for s in samples]}",
+            f"all={[round(s, 3) for s in samples]} "
+            f"compiled warm={warm_compiled} reps={rep_compiled}",
             flush=True,
         )
 
